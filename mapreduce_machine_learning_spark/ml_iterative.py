@@ -2,16 +2,18 @@
 Spark-style.
 
 The reference runs each iteration as a *separate Hadoop job*, re-reading input
-from HDFS and shipping parameters via ``--file``/jobconf. Here every algorithm
-is a driver loop over ONE cached DataFrame: parameters are folded into the
+from HDFS and shipping parameters via ``--file``/jobconf. Here every
+iterative fit is a driver loop over ONE cached projection of its input
+columns, owned and unpersisted by the fit: parameters are folded into the
 next iteration's expressions as literals (Catalyst constant-folds them into
-codegen), sufficient statistics come back as a single collected row, and the
-dense solve runs in numpy on the driver (Chu et al. NIPS'06 summation form).
-At 100 TB the per-iteration cost is one scan of cached columnar batches and a
-shuffle of one sufficient-statistics row per partition — broadcast of the
-parameter vector is implicit in literal folding (use
-``sparkContext.broadcast`` instead once parameters exceed plan-literal scale,
-e.g. >10^4 features).
+codegen), sufficient statistics come back through an observed action
+(``_sums``), and the dense solve runs in numpy on the driver (Chu et al.
+NIPS'06 summation form). At 100 TB the per-iteration cost is one
+single-stage job: a scan of cached columnar batches in which each task folds
+its partition into one aggregation buffer and the driver merges the buffers
+— no shuffle. Broadcast of the parameter vector is implicit in literal
+folding (use ``sparkContext.broadcast`` instead once parameters exceed
+plan-literal scale, e.g. >10^4 features).
 
 MLlib mirrors (`mllib_*`) fit the equivalent `pyspark.ml` estimator so users
 of the reference get both the transparent summation-form path and the
@@ -25,8 +27,56 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+# ------------------------------------------------------- summation-form pass
+def _sums(df: DataFrame, *aggs: Column) -> dict:
+    """Evaluate one-row aggregates over ``df`` as ONE single-stage job and
+    return them as a dict keyed by alias — the reference's mapper partial
+    sums and single reducer, as written. Each task folds its partition into
+    an aggregation buffer carried by an accumulator, and the driver merges
+    the buffers when the action ends: no Exchange, no final-aggregate stage
+    and nothing for AQE to re-plan, where ``df.agg(...).collect()`` runs a
+    partial aggregate, a shuffle to one partition and a final aggregate.
+
+    The action is a ``noop`` write of a one-literal projection; column
+    pruning then reads only the columns the aggregates reference. Spark
+    applies the accumulator updates of an action's result tasks once per
+    partition, so a retried or speculative task cannot double-count."""
+    obs = Observation()
+    df.observe(obs, *aggs).select(F.lit(1)).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    return obs.get
+
+
+def _doubles(df: DataFrame, cols: list[str]) -> DataFrame:
+    """The fit-owned input of an iterative fit: ``cols`` cast to double as
+    ``_c0``, ``_c1``, …, cached. The first iteration's job fills the cache;
+    the fit unpersists it in ``finally``. The caller's frame is never
+    cached or unpersisted here."""
+    return df.select(
+        *[F.col(c).cast("double").alias(f"_c{i}") for i, c in enumerate(cols)]
+    ).cache()
+
+
+def _nearest(dists: list[Column]) -> Column:
+    """Index of the smallest distance, lowest index on ties: ``least`` over
+    (distance, index) structs orders by distance, then index. The plan grows
+    linearly in k, where a CASE chain that re-uses the running minimum in
+    both branches doubles per centroid. A null distance sorts first, so a
+    row with a null feature (null to every centroid) lands in cluster 0."""
+    if len(dists) == 1:
+        return F.lit(0)
+    return F.least(
+        *[F.struct(d.alias("d"), F.lit(i).alias("i")) for i, d in enumerate(dists)]
+    )["i"]
+
+
+def _sq_dists(feats: list[Column], cents: list[tuple[float, ...]]) -> list[Column]:
+    return [sum((f - ci) * (f - ci) for f, ci in zip(feats, cent)) for cent in cents]
 
 
 # ---------------------------------------------------------------- linear reg
@@ -44,7 +94,7 @@ def linreg_normal(df: DataFrame, feature_cols: list[str], label_col: str) -> np.
             aggs.append(F.sum(feats[i] * feats[j]).alias(f"g_{i}_{j}"))
     for i in range(p):
         aggs.append(F.sum(feats[i] * y).alias(f"b_{i}"))
-    row = df.agg(*aggs).collect()[0]
+    row = _sums(df, *aggs)
     G = np.zeros((p, p))
     for i in range(p):
         for j in range(i, p):
@@ -63,20 +113,27 @@ def logreg_gd(
 ) -> np.ndarray:
     """Full-batch gradient descent for logistic regression (intercept
     included). Each step: fold current weights into a σ(wᵀx) expression,
-    aggregate the gradient Σ(σ−y)·x, update on the driver. The reference
-    resubmits a MapReduce job per step; here the input is cached once."""
-    feats = [F.lit(1.0)] + [F.col(c).cast("double") for c in feature_cols]
-    y = F.col(label_col).cast("double")
-    w = np.zeros(len(feats))
-    df = df.cache()
-    n = df.count()  # materializes the cache
-    for _ in range(iters):
-        z = sum(float(wi) * fi for wi, fi in zip(w, feats))
-        sigma = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-        grads = [F.sum((sigma - y) * fi).alias(f"g{i}") for i, fi in enumerate(feats)]
-        row = df.agg(*grads).collect()[0]
-        w = w - lr * np.array([row[f"g{i}"] for i in range(len(feats))]) / n
-    return w
+    aggregate the gradient Σ(σ−y)·x and the row count n, update on the
+    driver. The reference resubmits a MapReduce job per step; here the
+    projected input is cached once and each step is one job."""
+    pts = _doubles(df, [*feature_cols, label_col])
+    try:
+        p = len(feature_cols) + 1
+        feats = [F.lit(1.0)] + [F.col(f"_c{i}") for i in range(p - 1)]
+        y = F.col(f"_c{p - 1}")
+        w = np.zeros(p)
+        for _ in range(iters):
+            z = sum(float(wi) * fi for wi, fi in zip(w, feats))
+            sigma = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
+            row = _sums(
+                pts,
+                F.count(F.lit(1)).alias("n"),
+                *[F.sum((sigma - y) * fi).alias(f"g{i}") for i, fi in enumerate(feats)],
+            )
+            w = w - lr * np.array([row[f"g{i}"] for i in range(p)]) / row["n"]
+        return w
+    finally:
+        pts.unpersist(blocking=True)
 
 
 def logreg_irls(
@@ -90,37 +147,39 @@ def logreg_irls(
     the second-order companion of ``logreg_gd`` and the iterative extension
     of the ``q_ml_logreg_newton`` kernel. Each step aggregates BOTH the
     gradient Σ(σ−y)·x and the Hessian upper triangle Σσ(1−σ)·x xᵀ in ONE
-    pass over the cached input (p + p(p+1)/2 doubles per partition,
-    scale-invariant shuffle), then solves the dense (p+1)-system on the
-    driver. Converges in ~4 steps where GD needs hundreds; the tiny ridge
-    keeps the solve stable if the Hessian is near-singular."""
-    feats = [F.lit(1.0)] + [F.col(c).cast("double") for c in feature_cols]
-    y = F.col(label_col).cast("double")
-    p = len(feats)
-    w = np.zeros(p)
-    df = df.cache()
-    df.count()  # materializes the cache
-    for _ in range(iters):
-        z = sum(float(wi) * fi for wi, fi in zip(w, feats))
-        sigma = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
-        aggs = [
-            F.sum((sigma - y) * fi).alias(f"g{i}") for i, fi in enumerate(feats)
-        ]
-        for i in range(p):
-            for j in range(i, p):
-                aggs.append(
-                    F.sum(sigma * (1.0 - sigma) * feats[i] * feats[j]).alias(
-                        f"h_{i}_{j}"
+    pass over the cached input (p + p(p+1)/2 doubles per task buffer,
+    scale-invariant), then solves the dense (p+1)-system on the driver.
+    Converges in ~4 steps where GD needs hundreds; the tiny ridge keeps the
+    solve stable if the Hessian is near-singular."""
+    pts = _doubles(df, [*feature_cols, label_col])
+    try:
+        p = len(feature_cols) + 1
+        feats = [F.lit(1.0)] + [F.col(f"_c{i}") for i in range(p - 1)]
+        y = F.col(f"_c{p - 1}")
+        w = np.zeros(p)
+        for _ in range(iters):
+            z = sum(float(wi) * fi for wi, fi in zip(w, feats))
+            sigma = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
+            aggs = [
+                F.sum((sigma - y) * fi).alias(f"g{i}") for i, fi in enumerate(feats)
+            ]
+            for i in range(p):
+                for j in range(i, p):
+                    aggs.append(
+                        F.sum(sigma * (1.0 - sigma) * feats[i] * feats[j]).alias(
+                            f"h_{i}_{j}"
+                        )
                     )
-                )
-        row = df.agg(*aggs).collect()[0]
-        g = np.array([row[f"g{i}"] for i in range(p)])
-        H = np.zeros((p, p))
-        for i in range(p):
-            for j in range(i, p):
-                H[i, j] = H[j, i] = row[f"h_{i}_{j}"]
-        w = w - np.linalg.solve(H + ridge * np.eye(p), g)
-    return w
+            row = _sums(pts, *aggs)
+            g = np.array([row[f"g{i}"] for i in range(p)])
+            H = np.zeros((p, p))
+            for i in range(p):
+                for j in range(i, p):
+                    H[i, j] = H[j, i] = row[f"h_{i}_{j}"]
+            w = w - np.linalg.solve(H + ridge * np.eye(p), g)
+        return w
+    finally:
+        pts.unpersist(blocking=True)
 
 
 # ------------------------------------------------------------------- k-means
@@ -131,39 +190,37 @@ def kmeans_fit(
     iters: int = 5,
 ) -> tuple[list[tuple[float, ...]], list[int]]:
     """Lloyd's algorithm: assignment is a pure-expression argmin over the
-    current centroids (ties → lowest id), the update is one groupBy over the
-    cached points. Returns (centroids, cluster sizes). Empty clusters keep
-    their previous centroid — same policy as MLlib."""
-    pts = df.select(*[F.col(c).cast("double").alias(c) for c in feature_cols]).cache()
-    cents = [tuple(map(float, c)) for c in init_centroids]
-    k = len(cents)
-    sizes = [0] * k
-    for _ in range(iters):
-        dists = [
-            sum((F.col(c) - ci) * (F.col(c) - ci) for c, ci in zip(feature_cols, cent))
-            for cent in cents
-        ]
-        assign = F.lit(0)
-        best = dists[0]
-        for i in range(1, k):
-            assign = F.when(dists[i] < best, i).otherwise(assign)
-            best = F.when(dists[i] < best, dists[i]).otherwise(best)
-        stats = (
-            pts.withColumn("c", assign)
-            .groupBy("c")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                *[F.avg(c).alias(f"m_{c}") for c in feature_cols],
-            )
-            .collect()
-        )
-        new_cents = list(cents)
+    current centroids (ties → lowest id); the update is one pass of k·(d+1)
+    conditional aggregates over the cached points — per cluster a count and
+    the per-feature means of its members. Returns (centroids, cluster
+    sizes). Empty clusters keep their previous centroid — same policy as
+    MLlib."""
+    pts = _doubles(df, feature_cols)
+    try:
+        feats = [F.col(f"_c{j}") for j in range(len(feature_cols))]
+        cents = [tuple(map(float, c)) for c in init_centroids]
+        k = len(cents)
         sizes = [0] * k
-        for r in stats:
-            new_cents[r["c"]] = tuple(r[f"m_{c}"] for c in feature_cols)
-            sizes[r["c"]] = r["n"]
-        cents = new_cents
-    return cents, sizes
+        for _ in range(iters):
+            assigned = pts.withColumn("_k", _nearest(_sq_dists(feats, cents)))
+            member = [F.col("_k") == i for i in range(k)]
+            aggs = [F.count(F.when(member[i], 1)).alias(f"n_{i}") for i in range(k)]
+            aggs += [
+                F.avg(F.when(member[i], f)).alias(f"m_{i}_{j}")
+                for i in range(k)
+                for j, f in enumerate(feats)
+            ]
+            row = _sums(assigned, *aggs)
+            sizes = [row[f"n_{i}"] for i in range(k)]
+            cents = [
+                tuple(row[f"m_{i}_{j}"] for j in range(len(feats)))
+                if sizes[i]
+                else cents[i]
+                for i in range(k)
+            ]
+        return cents, sizes
+    finally:
+        pts.unpersist(blocking=True)
 
 
 # ---------------------------------------------------------------------- GMM
@@ -176,50 +233,52 @@ class Gmm1D:
 
 def gmm_em_1d(df: DataFrame, col: str, init: Gmm1D, iters: int = 5) -> Gmm1D:
     """EM for a two-component 1-D Gaussian mixture. E-step responsibilities
-    and the M-step sufficient statistics (Σr, Σr·x, Σr·x²) are ONE
+    and the M-step sufficient statistics (n, Σr, Σr·x, Σr·x²) are ONE
     aggregation; parameter updates are scalar math on the driver."""
-    x = F.col(col).cast("double")
     params = init
-    cached = df.select(x.alias("_x")).cache()
-    n = cached.count()
-    x = F.col("_x")
-    for _ in range(iters):
+    cached = _doubles(df, [col])
+    try:
+        x = F.col("_c0")
 
         def pdf(pi, mu, s):
             return (
-                pi
-                * F.exp(-F.pow((x - mu) / s, 2) / 2.0)
-                / (s * math.sqrt(2 * math.pi))
+                pi * F.exp(-F.pow((x - mu) / s, 2) / 2.0) / (s * math.sqrt(2 * math.pi))
             )
 
-        p1 = pdf(params.pi[0], params.mu[0], params.sigma[0])
-        p2 = pdf(params.pi[1], params.mu[1], params.sigma[1])
-        r1 = p1 / (p1 + p2)
-        row = cached.agg(
-            F.sum(r1).alias("n1"),
-            F.sum(r1 * x).alias("sx1"),
-            F.sum(r1 * x * x).alias("sxx1"),
-            F.sum((1 - r1) * x).alias("sx2"),
-            F.sum((1 - r1) * x * x).alias("sxx2"),
-        ).collect()[0]
-        n1 = row["n1"]
-        n2 = n - n1
-        mu1, mu2 = row["sx1"] / n1, row["sx2"] / n2
-        var1 = max(row["sxx1"] / n1 - mu1 * mu1, 1e-9)
-        var2 = max(row["sxx2"] / n2 - mu2 * mu2, 1e-9)
-        params = Gmm1D(
-            pi=(n1 / n, n2 / n),
-            mu=(mu1, mu2),
-            sigma=(math.sqrt(var1), math.sqrt(var2)),
-        )
-    return params
+        for _ in range(iters):
+            p1 = pdf(params.pi[0], params.mu[0], params.sigma[0])
+            p2 = pdf(params.pi[1], params.mu[1], params.sigma[1])
+            r1 = p1 / (p1 + p2)
+            row = _sums(
+                cached,
+                F.count(F.lit(1)).alias("n"),
+                F.sum(r1).alias("n1"),
+                F.sum(r1 * x).alias("sx1"),
+                F.sum(r1 * x * x).alias("sxx1"),
+                F.sum((1 - r1) * x).alias("sx2"),
+                F.sum((1 - r1) * x * x).alias("sxx2"),
+            )
+            n, n1 = row["n"], row["n1"]
+            n2 = n - n1
+            mu1, mu2 = row["sx1"] / n1, row["sx2"] / n2
+            var1 = max(row["sxx1"] / n1 - mu1 * mu1, 1e-9)
+            var2 = max(row["sxx2"] / n2 - mu2 * mu2, 1e-9)
+            params = Gmm1D(
+                pi=(n1 / n, n2 / n),
+                mu=(mu1, mu2),
+                sigma=(math.sqrt(var1), math.sqrt(var2)),
+            )
+        return params
+    finally:
+        cached.unpersist(blocking=True)
 
 
 # -------------------------------------------------------------- naive Bayes
 def gaussian_nb_fit(df: DataFrame, label_col: str, feature_col: str):
     """Gaussian naive Bayes: per-class (prior, mean, variance) in one pass —
-    the reference's NB job. Returns {class: (prior, mean, var)}."""
-    n = df.count()
+    the reference's NB job. The classes are unknown up front, so this is a
+    groupBy; n is the sum of the class counts. Returns
+    {class: (prior, mean, var)}."""
     rows = (
         df.groupBy(label_col)
         .agg(
@@ -229,6 +288,7 @@ def gaussian_nb_fit(df: DataFrame, label_col: str, feature_col: str):
         )
         .collect()
     )
+    n = sum(r["n"] for r in rows)
     return {r[label_col]: (r["n"] / n, r["mu"], r["var"]) for r in rows}
 
 
@@ -382,26 +442,15 @@ def kmeans_assign(
 ) -> DataFrame:
     """Assign each row to its nearest centroid (lowest id wins ties) — the
     transform step of kmeans_fit, reusable on unseen data."""
-    dists = [
-        sum(
-            (F.col(c).cast("double") - ci) * (F.col(c).cast("double") - ci)
-            for c, ci in zip(feature_cols, cent)
-        )
-        for cent in centroids
-    ]
-    assign = F.lit(0)
-    best = dists[0]
-    for i in range(1, len(dists)):
-        assign = F.when(dists[i] < best, i).otherwise(assign)
-        best = F.when(dists[i] < best, dists[i]).otherwise(best)
-    return df.withColumn("cluster", assign)
+    feats = [F.col(c).cast("double") for c in feature_cols]
+    return df.withColumn("cluster", _nearest(_sq_dists(feats, centroids)))
 
 
 def accuracy(df: DataFrame, label_col: str, pred_col: str) -> float:
     """Fraction of rows where prediction equals label — one aggregation."""
-    row = df.agg(
-        F.avg((F.col(label_col) == F.col(pred_col)).cast("double")).alias("acc")
-    ).collect()[0]
+    row = _sums(
+        df, F.avg((F.col(label_col) == F.col(pred_col)).cast("double")).alias("acc")
+    )
     return float(row["acc"])
 
 
@@ -484,7 +533,7 @@ def pca_power(
     for i in range(d):
         for j in range(i, d):
             aggs.append(F.sum(feats[i] * feats[j]).alias(f"g_{i}_{j}"))
-    row = df.agg(*aggs).collect()[0]
+    row = _sums(df, *aggs)
     n = row["n"]
     s = np.array([row[f"s_{i}"] for i in range(d)])
     G = np.zeros((d, d))

@@ -74,15 +74,69 @@ def test_kmeans_vs_numpy(spark, events_pdf):
     cents, sizes = mli.kmeans_fit(df, ["value", "hr"], init, iters=5)
 
     P = events_pdf[["value", "hr"]].to_numpy()
-    C = np.array(init)
-    for _ in range(5):
-        d = ((P[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-        a = d.argmin(axis=1)  # ties → lowest id, same as the CASE chain
-        for i in range(3):
-            if (a == i).any():
-                C[i] = P[a == i].mean(axis=0)
+    C, _ = _np_kmeans(P, init, 5)
     np.testing.assert_allclose(np.array(cents), C, rtol=1e-9)
     assert sum(sizes) == len(P)
+
+
+def _np_kmeans(P, init, iters):
+    """Lloyd's algorithm in numpy: ties → lowest id, an empty cluster keeps
+    its centroid. Returns (centroids, sizes of the last assignment)."""
+    C = np.array(init, dtype=float)
+    sizes = np.zeros(len(C), dtype=int)
+    for _ in range(iters):
+        a = ((P[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+        sizes = np.bincount(a, minlength=len(C))
+        for i in range(len(C)):
+            if sizes[i]:
+                C[i] = P[a == i].mean(axis=0)
+    return C, sizes
+
+
+def test_kmeans_k16_vs_numpy(spark, events_pdf):
+    """At k=16 the least-of-structs argmin must still pick the clusters
+    numpy picks (lowest id on ties)."""
+    init = [(10.0 + 12.5 * i, float((7 * i) % 24)) for i in range(16)]
+    df = load_table(spark, SF_DIR, "events").select(
+        "value", F.hour("ts").cast("double").alias("hr")
+    )
+    cents, sizes = mli.kmeans_fit(df, ["value", "hr"], init, iters=3)
+    C, np_sizes = _np_kmeans(events_pdf[["value", "hr"]].to_numpy(), init, 3)
+    np.testing.assert_allclose(np.array(cents), C, rtol=1e-9)
+    assert sizes == np_sizes.tolist()
+
+
+def _plan_nodes(df, col):
+    """Expression nodes of ``col`` in the analyzed plan of ``df``."""
+    proj = df._jdf.queryExecution().analyzed()
+    exprs = [proj.projectList().apply(i) for i in range(proj.projectList().size())]
+    (e,) = [e for e in exprs if e.name() == col]
+    return len(e.treeString().splitlines())
+
+
+def test_kmeans_assign_plan_linear_in_k(spark):
+    df = spark.createDataFrame([(1.0, 2.0)], "a double, b double")
+    cents = [(float(i), float(-i)) for i in range(16)]
+    n4 = _plan_nodes(mli.kmeans_assign(df, ["a", "b"], cents[:4]), "cluster")
+    n16 = _plan_nodes(mli.kmeans_assign(df, ["a", "b"], cents), "cluster")
+    # a plan of a·k + b nodes (b ≥ 0) grows at most 4× from k=4 to k=16; an
+    # argmin chain that copies the running minimum per level grows 2^12×
+    assert n4 < n16 <= 4 * n4, (n4, n16)
+
+
+def test_kmeans_assign_null_feature_lands_in_cluster_0(spark):
+    df = spark.createDataFrame(
+        [(1, None, 12.0), (2, 149.0, 18.0), (3, 101.0, None)],
+        "id int, value double, hr double",
+    )
+    init = [(50.0, 6.0), (100.0, 12.0), (150.0, 18.0)]
+    got = {
+        r["id"]: r["cluster"]
+        for r in mli.kmeans_assign(df, ["value", "hr"], init).collect()
+    }
+    assert got == {1: 0, 2: 2, 3: 0}
+    one = mli.kmeans_assign(df, ["value", "hr"], init[:1]).collect()
+    assert [r["cluster"] for r in one] == [0, 0, 0]
 
 
 def test_gmm_em_vs_numpy(spark, events_pdf):
@@ -354,3 +408,107 @@ def test_mllib_gmm_recovers_similar_components(spark):
         # different convergence criteria
         assert abs(om - mm) < 0.35 * max(abs(om), 1.0)
     assert all(s > 0 for s in stds)
+
+
+def test_sums_matches_agg_collect(spark):
+    """The observed single-stage action returns what agg().collect() does:
+    on the table as loaded, on 8 partitions (the driver merges 8 buffers)
+    and on an empty frame (count 0, every other aggregate null)."""
+    ev = load_table(spark, SF_DIR, "events")
+    aggs = [
+        F.count(F.lit(1)).alias("n"),
+        F.sum("value").alias("s"),
+        F.avg("value").alias("a"),
+        F.var_samp("value").alias("v"),
+    ]
+    for df in (ev, ev.repartition(8)):
+        got = mli._sums(df, *aggs)
+        want = df.agg(*aggs).collect()[0].asDict()
+        assert got["n"] == want["n"] == 1000
+        for k in ("s", "a", "v"):
+            assert got[k] == pytest.approx(want[k], rel=1e-12), k
+    empty = ev.filter(F.lit(False))
+    assert mli._sums(empty, *aggs) == empty.agg(*aggs).collect()[0].asDict()
+    assert mli._sums(empty, *aggs) == {"n": 0, "s": None, "a": None, "v": None}
+
+
+def _fit_calls(spark):
+    """(name, call, jobs it may run) for every summation-form fit."""
+    ev = load_table(spark, SF_DIR, "events")
+    pts = ev.select("value", F.hour("ts").cast("double").alias("hr"))
+    lab = ev.select(
+        (F.col("value") / 100.0).alias("x"),
+        F.when(F.col("event_type") == "purchase", 1.0).otherwise(0.0).alias("y"),
+    )
+    init = [(50.0, 6.0), (100.0, 12.0), (150.0, 18.0)]
+    gmm = mli.Gmm1D(pi=(0.5, 0.5), mu=(50.0, 150.0), sigma=(25.0, 25.0))
+    w = np.array([-1.0, 0.5])
+    return lab, [
+        ("linreg_normal", lambda: mli.linreg_normal(pts, ["hr"], "value"), 1),
+        ("logreg_gd", lambda: mli.logreg_gd(lab, ["x"], "y", iters=5), 5),
+        ("logreg_irls", lambda: mli.logreg_irls(lab, ["x"], "y", iters=3), 3),
+        ("kmeans_fit", lambda: mli.kmeans_fit(pts, ["value", "hr"], init, 4), 4),
+        ("gmm_em_1d", lambda: mli.gmm_em_1d(ev, "value", gmm, iters=3), 3),
+        ("pca_power", lambda: mli.pca_power(pts, ["value", "hr"]), 1),
+        (
+            "accuracy",
+            lambda: mli.accuracy(mli.logreg_predict(lab, w, ["x"]), "y", "pred"),
+            1,
+        ),
+    ]
+
+
+def test_summation_form_fits_run_one_single_stage_job_per_pass(spark):
+    """Each pass over the data is one job of one stage: a per-iteration
+    shuffle (agg().collect() under AQE is two jobs) or a separate count
+    would fail this loudly. gaussian_nb_fit keeps its groupBy — classes are
+    unknown up front — and may run at most 2 jobs."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    _, calls = _fit_calls(spark)
+    ev = load_table(spark, SF_DIR, "events")
+    calls.append(
+        ("gaussian_nb_fit", lambda: mli.gaussian_nb_fit(ev, "event_type", "value"), 2)
+    )
+    for name, call, want in calls:
+        group = f"job-count-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            call()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30000)
+        jobs = tracker.getJobIdsForGroup(group)
+        if name == "gaussian_nb_fit":
+            assert 1 <= len(jobs) <= want, (name, len(jobs))
+            continue
+        assert len(jobs) == want, (name, len(jobs))
+        for j in jobs:
+            assert len(tracker.getJobInfo(j).stageIds) == 1, (name, j)
+
+
+def _cached_rdds(spark):
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_fits_release_their_cache_and_keep_the_callers(spark):
+    """A fit caches only the projection it owns and unpersists it before
+    returning; a frame the caller cached stays cached."""
+    lab, calls = _fit_calls(spark)
+    before = _cached_rdds(spark)
+    for name, call, _ in calls:
+        call()
+        assert _cached_rdds(spark) == before, name
+    lab.cache()
+    try:
+        lab.count()
+        held = _cached_rdds(spark)
+        assert len(held) == len(before) + 1
+        mli.logreg_gd(lab, ["x"], "y", iters=2)
+        mli.logreg_irls(lab, ["x"], "y", iters=2)
+        assert _cached_rdds(spark) == held
+        assert spark._jsparkSession.sharedState().cacheManager().lookupCachedData(
+            lab._jdf
+        ).isDefined()
+    finally:
+        lab.unpersist(blocking=True)
